@@ -1,27 +1,26 @@
-"""Arrow-batched twins of the tokenize/shingle/hash expression chains.
+"""Arrow-batched text kernels: shingles, MinHash, SimHash, the hashed
+shingle index and the fused textstats pass.
 
-Round-8 optimization (guide §4.1/§4.2): lambda-bearing SQL expressions
-(transform/filter/aggregate) never reach whole-stage codegen — every
-array element is an interpreted expression eval — and shingle pipelines
-additionally re-evaluate the token expression inside per-shingle
-lambdas. At sf1.0 (50k docs) that made minhash_signatures (4.4s),
-simhash (5.9s), and the shingle halves of jaccard_pairs/decontam the
-most expensive text queries for work that is fundamentally one
-tokenize+md5 pass.
+Each kernel is a mapInArrow function that tokenizes a row once and does
+the rest of its work in numpy over the batch. Lambda-bearing SQL
+expressions (transform/filter/aggregate) never reach whole-stage
+codegen, and shingle chains re-evaluate the token expression inside
+per-shingle lambdas, so these kernels are the only Spark path for this
+work (dedup.py, textstats.with_textstats).
 
-These mapInArrow kernels compute the IDENTICAL md5-derived integers:
-tokenization is `functions/hashing.py_tokens` (the fuzz-pinned python
-twin of `spark_tokens` — hostile-text parity across 3 seeds x 30k docs
-x 7 legs, scripts/fuzz_scoring.py), hashes are `py_md5_hash`'s 60-bit
-md5 prefix, and the minhash mix family is the same
-`(h % MIX_MOD) * a + b % MIX_MOD` affine arithmetic in exact int64.
-Every output is an INTEGER, so parity with the expression chains (and
-the DuckDB oracles) is bit-exact, not float-rounded — pinned per
-operator in tests/test_dedup.py.
+The integers they compute are portable: tokenization is
+`functions/hashing.py_tokens` (the Python twin of `spark_tokens` /
+`duckdb_tokens`, fuzz-pinned on hostile text by scripts/fuzz_scoring.py
+and checked against the JVM tokenizer in tests/test_dedup.py), hashes
+are `py_md5_hash`'s 60-bit md5 prefix, and the minhash mix family is
+the same `(h % MIX_MOD) * a + b % MIX_MOD` affine arithmetic in exact
+int64. Every dedup output is an INTEGER, so those kernels match the
+pure-Python twins in tests/test_dedup.py and the DuckDB oracles in
+__spark_entry__.py bit-exactly, not float-rounded.
 
 Heavy init (mix constants, numpy arrays) happens once per task before
-the batch loop (guide §4.5); a module-level shingle-hash cache
-amortizes md5 across batches of a reused worker.
+the batch loop; a module-level shingle-hash cache amortizes md5 across
+batches of a reused worker.
 """
 
 from __future__ import annotations
@@ -33,7 +32,6 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from fastpasta_spark.functions.hashing import (
     MIX_MOD,
@@ -60,13 +58,10 @@ def _h60(s: str) -> int:
 
 
 def _shingles(text, n: int) -> list[str] | None:
-    """DISTINCT word n-gram shingles — exact twin of
-    dedup.with_shingles: fewer than n tokens yields the single
-    joined-tokens shingle ('' for EMPTY text), while NULL text
-    propagates to a NULL shingle array (split(translate(NULL)) is NULL,
-    so the whole expression chain yields NULL, not ['']) — returned as
-    None here; callers must emit NULL / no rows exactly like the
-    expression forms."""
+    """DISTINCT word n-gram shingles in first-seen order: fewer than n
+    tokens yields the single joined-tokens shingle ('' for EMPTY text),
+    while NULL text yields None — callers emit a NULL signature / no
+    index rows for it (the DuckDB oracles' NULL propagation)."""
     if text is None:
         return None
     toks = py_tokens(text)
@@ -80,16 +75,16 @@ def minhash_signature_arrow(df: DataFrame, k: int = 32, n: int = 3,
                             id_col: str = "doc_id",
                             text_col: str = "text",
                             out_col: str = "minhash") -> DataFrame:
-    """(id_col, minhash array<bigint>) — exact twin of
-    ``minhash_signature(with_shingles(df, text_col, n), k)`` projected
-    to the two columns every caller keeps.
+    """(id_col, minhash array<bigint>): k-permutation MinHash over each
+    row's distinct word n-gram shingles — ONE md5 per shingle, then k
+    affine mixes mod a 30-bit prime (functions/hashing.py mix family).
+    NULL text gives a NULL signature; empty text hashes the single ''
+    shingle.
 
-    One vectorized pass instead of the interpreted aggregate-of-
-    transform chain; being a physical mapInArrow node it is also a
-    natural ProjectionCollapse boundary — downstream band/element
-    references read the materialized column instead of re-inlining the
-    shingle chain, so the tracked_persist the expression form needed is
-    unnecessary here.
+    Being a physical mapInArrow node it is a natural ProjectionCollapse
+    boundary — downstream element references read the materialized
+    column; callers that feed several consumers (the LSH band self-join)
+    still persist it so the kernel runs once.
     """
     consts = mix_constants(k)
     a_vec = np.array([a for a, _ in consts], dtype=np.int64)
@@ -120,10 +115,9 @@ def minhash_signature_arrow(df: DataFrame, k: int = 32, n: int = 3,
 def simhash_arrow(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", bits: int = 32,
                   out_col: str = "simhash") -> DataFrame:
-    """(id_col, simhash bigint) — exact twin of ``dedup.simhash``
-    projected to the two columns its callers keep: per bit b, sign of
-    sum over DISTINCT tokens of (+1 if bit b of the 60-bit token hash
-    set else -1); token-free docs hash to 0."""
+    """(id_col, simhash bigint): per bit b, sign of the sum over
+    DISTINCT tokens of (+1 if bit b of the 60-bit token hash is set
+    else -1); token-free and NULL docs hash to 0."""
     id_type = dict(df.dtypes)[id_col]
     schema = f"{id_col} {id_type}, {out_col} bigint"
     weights = (1 << np.arange(bits)).astype(np.int64)
@@ -173,24 +167,22 @@ def _round_half_up(x: float, dp: int = 6) -> float:
 
 
 def textstats_arrow(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact twin of textstats.with_textstats — all input columns plus
-    (n_tokens, quality, fingerprint, lang_pred) computed in one Python
-    pass per batch instead of the interpreted let-bound expression.
+    """The body of textstats.with_textstats — all input columns plus
+    (n_tokens, quality, fingerprint, lang_pred) computed in one pass
+    per batch.
 
-    Semantics replicated precisely (parity-pinned in
-    tests/test_textstats.py): n_chars counts CODE POINTS (Spark
+    For non-null text each column equals its individual expression
+    operator in textstats.py (token_count, quality_score, fingerprint,
+    language_id; pinned in tests/test_textstats.py): n_chars counts CODE POINTS (Spark
     length() is UTF8String.numChars, same as Python len — NOT Java
     String.length's UTF-16 units); the alpha ratio counts [a-z] after
     lowercasing; quality terms sum left-to-right and round HALF_UP on
     the shortest-repr decimal (Spark round); ratio/best equality for
     lang_pred compares the identical IEEE doubles; fingerprint is the
-    exact 48-bit-md5 rolling hash mod 2^31-1. NULL text follows the
-    expression chain precisely: the token array is NULL, so
-    size/aggregate go NULL — but the let-binding aggregate's ZERO
-    struct declares n_tokens/fingerprint as NON-NULLABLE fields, so
-    those NULLs coerce to 0 (probed empirically); quality is 0.25
-    because least() SKIPS the NULL stopword term while the alpha term
-    stays 0; lang_pred is 'unk'.
+    exact 48-bit-md5 rolling hash mod 2^31-1. NULL text gives
+    n_tokens 0, fingerprint 0, lang_pred 'unk' and quality 0.25 (the
+    NULL stopword term is skipped, as least() skips it in
+    quality_score, while the alpha term stays 0).
     """
     from fastpasta_spark.operators.textstats import STOPWORDS
 
@@ -336,13 +328,12 @@ def shingle_index_arrow(df: DataFrame, id_col: str, text_col: str,
                         with_count: bool = True,
                         drop_empty: bool = False,
                         out_col: str = "shingle") -> DataFrame:
-    """Exploded hashed-shingle inverted index — exact twin of the
-    with_shingles -> transform(md5) -> explode chains in
-    ``jaccard_pairs`` (with_count=True: carries n_sh = DISTINCT shingle
-    count) and ``decontaminate`` (drop_empty=True: the '' shingle of
-    token-free docs is dropped BEFORE hashing, same as its
-    filter(s -> s <> '')). Output: (id_col[, n_sh][, within_col],
-    out_col bigint)."""
+    """Exploded hashed-shingle inverted index: one row per DISTINCT
+    shingle per doc, keyed by its 60-bit md5 hash. ``jaccard_pairs``
+    uses with_count=True (carries n_sh = DISTINCT shingle count);
+    ``decontaminate`` uses drop_empty=True (the '' shingle of
+    token-free docs is dropped BEFORE hashing). NULL text emits no
+    rows. Output: (id_col[, n_sh][, within_col], out_col bigint)."""
     dtypes = dict(df.dtypes)
     parts = [f"{id_col} {dtypes[id_col]}"]
     if with_count:

@@ -36,7 +36,6 @@ tests assert row-for-row equality between this pass and the oracle.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from types import MappingProxyType
 
@@ -547,13 +546,10 @@ def _screen_clean_docs(codes: np.ndarray, parent: np.ndarray,
 def _make_arrow_pass(fused: bool, trigger_period: int | None = None,
                      chips_per_lane: int | None = None,
                      legal_chip_orderings: list[list[int]] | None = None,
-                     screen: bool | None = None,
+                     screen: bool = True,
                      valid_media=None):
-    # escape hatch / A-B lever: FASTPASTA_SCREEN=0 (read driver-side at
-    # pass-construction time, pickled into the closure) disables the
-    # clean-doc pre-screen so every doc takes the exact FSM loop
-    if screen is None:
-        screen = os.environ.get("FASTPASTA_SCREEN", "1") != "0"
+    # screen=False sends every doc through the exact FSM loop — only
+    # scripts/screen_pass_bench.py sets it, to time the clean-doc screen
 
     def arrow_pass(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # valid_media is a pyspark Broadcast of the media-id frozenset

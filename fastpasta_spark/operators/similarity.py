@@ -138,13 +138,7 @@ def _pair_cosine_udf():
 
 def cosine_sim_col(a: str, b: str):
     """Cosine similarity Column between two array columns, COSINE_EXPR
-    NULL semantics. Defaults to the Arrow numpy path (see
-    _pair_cosine_udf); FASTPASTA_ARROW_COSINE=0 falls back to the
-    literal HOF expression (A/B lever + escape hatch)."""
-    import os
-
-    if os.environ.get("FASTPASTA_ARROW_COSINE", "1") == "0":
-        return F.expr(COSINE_EXPR.format(a=a, b=b))
+    NULL semantics, via the Arrow numpy path (see _pair_cosine_udf)."""
     return _pair_cosine_udf()(F.col(a), F.col(b))
 
 

@@ -12,10 +12,10 @@ training-pipeline extension the prompt mandates, composed entirely from
 the tested operators (textstats, dedup, graph).
 
 Scale notes:
-  * one textstats pass computes quality/lang/tokens in a single codegen
-    expression (operators/textstats.with_textstats); the gated survivor
-    set is persisted once and feeds pair generation, the keeper
-    anti-join and the output
+  * one textstats pass computes quality/lang/tokens from a single
+    tokenization (operators/textstats.with_textstats, an Arrow kernel);
+    the gated survivor set is persisted once and feeds pair
+    generation, the keeper anti-join and the output
   * dedup edges never carry text — (hash, id) pairs only
   * the token budget has two modes: `exact_budget=True` does the
     deterministic cumulative-sum-over-global-order (ONE-partition

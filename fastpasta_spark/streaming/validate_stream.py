@@ -6,8 +6,12 @@ the primary engine (SURVEY.md §1.2). This module adds the genuinely
 continuous variant a 100 TB ingest pipeline wants: new parquet files of
 interleaved docs land in a directory; every micro-batch is validated by
 the SAME fused pass (plans/check_all semantics) via ``foreachBatch``,
-appending violations + per-batch metrics to sinks. foreachBatch gives
-exactly-once-per-epoch semantics with the checkpoint directory.
+writing violations + per-batch metrics to sinks partitioned by epoch id.
+foreachBatch is at-least-once: an epoch replays when the query stops
+between the sink write and the checkpoint commit. Every sink here is
+written one epoch partition at a time with overwrite (_write_epoch), so
+a replayed epoch REPLACES its own partition and the sinks hold each
+epoch's rows exactly once.
 
 Also provided: a watermarked windowed violation-rate aggregation over
 an event-timestamped violation stream (late data handled by watermark)
@@ -32,6 +36,19 @@ from fastpasta_spark.operators.sequence import sequence_pass, split_sequence_out
 GUARD_REPROBE_EPOCHS = 32
 
 
+def _write_epoch(df: DataFrame, epoch_id: int, path: str) -> None:
+    """Idempotent per-epoch sink write: the rows land in the
+    ``epoch_id=<id>`` partition directory of ``path`` (the layout
+    partitionBy("epoch_id") writes, so reading ``path`` yields an
+    epoch_id column), replacing whatever a previous attempt of the same
+    epoch wrote there and touching no other partition. Overwriting the
+    partition's own directory needs no partitionOverwriteMode, so the
+    session conf (read by every other query) never changes, and an
+    empty epoch still writes a schema-only file: a sink whose every
+    epoch was clean stays readable."""
+    df.write.mode("overwrite").parquet(f"{path}/epoch_id={epoch_id}")
+
+
 def validate_stream(
     spark: SparkSession,
     input_dir: str,
@@ -41,7 +58,9 @@ def validate_stream(
     max_files_per_trigger: int = 8,
 ) -> StreamingQuery:
     """readStream(parquet docs) -> fused validation per micro-batch ->
-    violations parquet sink (append). Returns the running query."""
+    violations and metrics parquet sinks under out_dir, partitioned by
+    epoch_id (replay-safe, see _write_epoch). Returns the running
+    query."""
     stream = (
         spark.readStream.schema(S.DOCS_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -76,22 +95,22 @@ def validate_stream(
                 vm_bc = media_id_broadcast(media, track=False)
                 guard["tripped_at"] = None if vm_bc is not None else epoch_id
         out = sequence_pass(batch_df, fused=True, valid_media_ids=vm_bc)
-        violations, stats = split_sequence_output(out.persist())
-        if media is not None and vm_bc is None:
-            from fastpasta_spark.plans.check_all import (
-                _referential_branch,
-                media_ref_rows,
-            )
+        try:
+            violations, stats = split_sequence_output(out.persist())
+            if media is not None and vm_bc is None:
+                from fastpasta_spark.plans.check_all import (
+                    _referential_branch,
+                    media_ref_rows,
+                )
 
-            violations = violations.unionByName(_referential_branch(
-                media_ref_rows(batch_df), media, broadcast_dim=False))
-        (violations.withColumn("epoch_id", F.lit(epoch_id))
-         .write.mode("append").parquet(f"{out_dir}/violations"))
-        (stats.withColumn("epoch_id", F.lit(epoch_id))
-         .write.mode("append").parquet(f"{out_dir}/metrics"))
-        out.unpersist()
-        if vm_bc is not None:
-            vm_bc.unpersist()
+                violations = violations.unionByName(_referential_branch(
+                    media_ref_rows(batch_df), media, broadcast_dim=False))
+            _write_epoch(violations, epoch_id, f"{out_dir}/violations")
+            _write_epoch(stats, epoch_id, f"{out_dir}/metrics")
+        finally:
+            out.unpersist()
+            if vm_bc is not None:
+                vm_bc.unpersist()
 
     return (
         stream.writeStream.foreachBatch(process_batch)
@@ -129,11 +148,9 @@ def constraint_stream(
     input_dir; each micro-batch's per-rule violation counts
     (operators/constraints.violation_counts — row rules fused into one
     agg, unique/FK as their own branches) land in out_dir partitioned by
-    epoch id. foreachBatch is at-least-once (an epoch replays if the
-    driver dies between the sink write and the checkpoint commit), so
-    the write is made idempotent with dynamic partition overwrite —
-    a replayed epoch REPLACES its own partition instead of appending a
-    duplicate row-set, and summing counts over epochs stays correct.
+    epoch id. The write is replay-safe (_write_epoch): a replayed epoch
+    REPLACES its own partition instead of appending a duplicate
+    row-set, so summing counts over epochs stays correct.
     Row-rule counts are additive across batches; unique/FK counts are
     per-batch scoped, as an unbounded stream has no global uniqueness
     without a state store — use streaming/dedup_stream for that.
@@ -147,16 +164,8 @@ def constraint_stream(
     )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (violation_counts(batch_df, rules)
-             .withColumn("epoch_id", F.lit(epoch_id))
-             .write.mode("overwrite").partitionBy("epoch_id")
-             .parquet(f"{out_dir}/rule_counts"))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        _write_epoch(violation_counts(batch_df, rules), epoch_id,
+                     f"{out_dir}/rule_counts")
 
     return (
         stream.writeStream.foreachBatch(process_batch)

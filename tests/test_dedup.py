@@ -27,6 +27,25 @@ def _py_shingles(text, n=3):
     return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
 
 
+def _py_minhash(text, k=8, n=3):
+    """Twin of the minhash kernel: one md5 per distinct shingle, then
+    the k affine mixes; NULL text has no signature."""
+    from fastpasta_spark.functions.hashing import mix_constants, py_mix
+
+    if text is None:
+        return None
+    hs = [py_md5_hash(s) for s in _py_shingles(text, n)]
+    return [min(py_mix(h, a, b) for h in hs) for a, b in mix_constants(k)]
+
+
+def _py_simhash(text, bits=32):
+    """Twin of simhash_fingerprints: over the DISTINCT tokens, bit b is
+    set when more token hashes have bit b set than clear."""
+    hs = [py_md5_hash(t) for t in set(py_tokens(text))]
+    return sum(1 << b for b in range(bits)
+               if sum(1 if (h >> b) & 1 else -1 for h in hs) > 0)
+
+
 def test_exact_duplicates(spark, documents):
     # inject known duplicates
     dup = documents.limit(3).withColumn(
@@ -38,19 +57,18 @@ def test_exact_duplicates(spark, documents):
     assert all(r.dup_count == 2 for r in got)
 
 
-def test_minhash_matches_python(spark, documents):
-    from fastpasta_spark.functions.hashing import mix_constants, py_mix
+def test_minhash_matches_python(spark, documents, hostile):
+    """The minhash kernel against its Python twin on real documents and
+    on the hostile rows (NULL text -> NULL signature, empty text -> the
+    signature of the single '' shingle)."""
+    from fastpasta_spark.operators.arrowtext import minhash_signature_arrow
 
-    rows = documents.limit(20).collect()
-    sig_df = dedup.minhash_signature(
-        dedup.with_shingles(documents.limit(20)), k=8
-    ).select("doc_id", "minhash").collect()
-    got = {r.doc_id: r.minhash for r in sig_df}
-    consts = mix_constants(8)
-    for r in rows:
-        hs = [py_md5_hash(s) for s in _py_shingles(r.text)]
-        expected = [min(py_mix(h, a, b) for h in hs) for a, b in consts]
-        assert got[r.doc_id] == expected, r.doc_id
+    for df in (documents.limit(20), hostile):
+        got = {r.doc_id: (list(r.minhash) if r.minhash is not None else None)
+               for r in minhash_signature_arrow(df, k=8, n=3).collect()}
+        want = {r.doc_id: _py_minhash(r.text) for r in df.collect()}
+        assert got == want
+    assert got[2] is None and got[1] is not None
 
 
 def test_exact_duplicates_hot_hash_capped(spark):
@@ -133,10 +151,13 @@ def test_simhash_deterministic_and_near(spark, documents):
     found = {(r.doc_a, r.doc_b) for r in dups}
     hits = sum((r.doc_id, f"{r.doc_id}_c") in found for r in df.collect())
     assert hits >= 8  # simhash is approximate; near-identical docs collide
-    # determinism
-    h1 = dedup.simhash(df).select("doc_id", "simhash").collect()
-    h2 = dedup.simhash(df.repartition(5)).select("doc_id", "simhash").collect()
+    # determinism, and the fingerprint is the Python twin's
+    h1 = dedup.simhash_fingerprints(df).collect()
+    h2 = dedup.simhash_fingerprints(df.repartition(5)).collect()
     assert sorted(map(tuple, h1)) == sorted(map(tuple, h2))
+    texts = {r.doc_id: r.text for r in df.collect()}
+    assert {r.doc_id: r.simhash for r in h1} == {
+        i: _py_simhash(t) for i, t in texts.items()}
 
 
 def test_segment_dedup_first_seen_wins(spark):
@@ -253,7 +274,8 @@ def test_simhash_duplicates_match_bruteforce(spark):
         [(f"d{i}", t) for i, t in enumerate(texts)],
         "doc_id string, text string")
     fps = {r.doc_id: r.simhash
-           for r in dedup.simhash(df, bits=32).collect()}
+           for r in dedup.simhash_fingerprints(df, bits=32).collect()}
+    assert fps == {f"d{i}": _py_simhash(t) for i, t in enumerate(texts)}
     expected = set()
     for a in fps:
         for b in fps:
@@ -644,8 +666,8 @@ def test_remove_contaminated_spans_property_and_shuffle_parity(spark):
 
 
 # ---------------------------------------------------------------------------
-# round-8: Arrow text kernels (operators/arrowtext.py) vs the expression
-# chains they replace — exact-integer parity on hostile text
+# Arrow text kernels (operators/arrowtext.py) vs their pure-Python twins
+# on hostile text — exact-integer parity
 # ---------------------------------------------------------------------------
 
 HOSTILE_ROWS = [
@@ -661,6 +683,7 @@ HOSTILE_ROWS = [
     (9, "x " * 50, "s1"),                # long run, duplicate shingles
     (10, "İstanbul Iı dotted undotted", "s0"),  # fold edge
     (11, "a-b_c.d,e;f:g h", "s1"),       # separators only between chars
+    (12, "\u212aelvin sign and astral \U0001F600 𝔘𝔫𝔦 words", "s0"),
 ]
 
 
@@ -670,92 +693,132 @@ def hostile(spark):
         HOSTILE_ROWS, "doc_id long, text string, source string").cache()
 
 
-def _with_env(monkeypatch, on: bool):
-    monkeypatch.setenv("FASTPASTA_ARROW_TEXT", "1" if on else "0")
+def test_jvm_tokens_and_md5_match_python(spark, hostile):
+    """The JVM primitives the Python twins stand in for: spark_tokens
+    (Java regex split after an ASCII-only fold) equals py_tokens, and
+    spark_md5_hash (md5 of the UTF-8 bytes) equals py_md5_hash, on the
+    text and on every token. NULL text is a NULL token array on the
+    JVM; the kernels map it to no shingles."""
+    from fastpasta_spark.functions.hashing import spark_md5_hash, spark_tokens
+
+    rows = hostile.select(
+        "doc_id", "text",
+        F.expr(spark_tokens("text")).alias("toks"),
+        F.expr(spark_md5_hash("text")).alias("text_h"),
+        F.expr(f"transform({spark_tokens('text')}, "
+               f"t -> {spark_md5_hash('t')})").alias("tok_h"),
+    ).collect()
+    assert len(rows) == len(HOSTILE_ROWS)
+    for r in rows:
+        if r.text is None:
+            assert r.toks is None and r.text_h is None, r.doc_id
+            continue
+        toks = py_tokens(r.text)
+        assert list(r.toks) == toks, r.doc_id
+        assert r.text_h == py_md5_hash(r.text), r.doc_id
+        assert list(r.tok_h) == [py_md5_hash(t) for t in toks], r.doc_id
 
 
-def test_minhash_arrow_matches_expression(spark, hostile, monkeypatch):
+def test_minhash_arrow_matches_expression(spark, hostile):
+    """The minhash kernel against a reference built from the JVM
+    expression primitives on the hostile rows: 3-token shingles of
+    spark_tokens (the whole token list below 3 tokens), distinct, each
+    hashed by spark_md5_hash; the k affine mixes are applied here.
+    NULL text -> NULL signature, empty text -> the '' shingle's."""
+    from fastpasta_spark.functions.hashing import (
+        mix_constants,
+        py_mix,
+        spark_md5_hash,
+        spark_tokens,
+    )
     from fastpasta_spark.operators.arrowtext import minhash_signature_arrow
 
-    def norm(r):
-        return (r.doc_id,
-                list(r.minhash) if r.minhash is not None else None)
-
-    arrow = sorted(
-        norm(r)
-        for r in minhash_signature_arrow(hostile, k=8, n=3).collect())
-    expr = sorted(
-        norm(r)
-        for r in dedup.minhash_signature(
-            dedup.with_shingles(hostile, "text", 3), k=8)
-        .select("doc_id", "minhash").collect())
-    assert arrow == expr
-    # NULL text -> NULL signature on BOTH paths (split(NULL) is NULL)
-    d = dict(arrow)
-    assert d[2] is None and d[1] is not None
-
-
-def test_simhash_arrow_matches_expression(spark, hostile, monkeypatch):
-    _with_env(monkeypatch, True)
-    arrow = sorted((r.doc_id, r.simhash) for r in
-                   dedup.simhash_fingerprints(hostile, bits=32).collect())
-    _with_env(monkeypatch, False)
-    expr = sorted((r.doc_id, r.simhash) for r in
-                  dedup.simhash_fingerprints(hostile, bits=32).collect())
-    assert arrow == expr
-    # token-free docs hash to 0 on both paths
-    d = dict(arrow)
-    assert d[1] == 0 and d[2] == 0
+    toks = spark_tokens("text")
+    shingles = (
+        f"CASE WHEN text IS NULL THEN NULL "
+        f"WHEN size({toks}) < 3 THEN array(array_join({toks}, ' ')) "
+        f"ELSE transform(sequence(1, size({toks}) - 2), "
+        f"i -> array_join(slice({toks}, i, 3), ' ')) END")
+    hashed = hostile.select(
+        "doc_id", F.expr(f"transform(array_distinct({shingles}), "
+                         f"s -> {spark_md5_hash('s')})").alias("hs"))
+    consts = mix_constants(8)
+    want = {r.doc_id: (None if r.hs is None else
+                       [min(py_mix(h, a, b) for h in r.hs) for a, b in consts])
+            for r in hashed.collect()}
+    got = {r.doc_id: (list(r.minhash) if r.minhash is not None else None)
+           for r in minhash_signature_arrow(hostile, k=8, n=3).collect()}
+    assert got == want
+    assert got[2] is None and got[1] is not None
 
 
-def test_shingle_index_arrow_matches_expression(spark, hostile, monkeypatch):
+def test_simhash_matches_python(spark, hostile):
+    got = {r.doc_id: r.simhash for r in
+           dedup.simhash_fingerprints(hostile, bits=32).collect()}
+    assert got == {i: _py_simhash(t) for i, t, _ in HOSTILE_ROWS}
+    # token-free docs hash to 0
+    assert got[1] == 0 and got[2] == 0
+
+
+def test_shingle_index_matches_python(spark, hostile):
     from fastpasta_spark.operators.arrowtext import shingle_index_arrow
 
     # jaccard form: n_sh + within passthrough, '' kept
-    arrow = sorted(map(tuple, shingle_index_arrow(
+    got = sorted(map(tuple, shingle_index_arrow(
         hostile, "doc_id", "text", 3, within_col="source",
         with_count=True).collect()))
-    sh = dedup.with_shingles(hostile, "text", 3).withColumn(
-        "n_sh", F.expr("size(shingles)"))
-    from fastpasta_spark.functions.hashing import spark_md5_hash
-    expr = sorted(map(tuple, sh.select(
-        "doc_id", "n_sh", "source",
-        F.explode(F.expr(
-            f"transform(shingles, s -> {spark_md5_hash('s')})"))
-        .alias("shingle")).collect()))
-    assert arrow == expr
+    want = sorted(
+        (i, len(sh), src, py_md5_hash(s))
+        for i, t, src in HOSTILE_ROWS if t is not None
+        for sh in [_py_shingles(t, 3)] for s in sh)
+    assert got == want
 
     # decontam form: no count, '' dropped
-    arrow2 = sorted(map(tuple, shingle_index_arrow(
+    got5 = sorted(map(tuple, shingle_index_arrow(
         hostile, "doc_id", "text", 5, with_count=False,
         drop_empty=True).collect()))
-    sh5 = dedup.with_shingles(hostile, "text", 5)
-    expr2 = sorted(map(tuple, sh5.select(
-        "doc_id",
-        F.explode(F.expr(
-            f"transform(filter(shingles, s -> s <> ''), "
-            f"s -> {spark_md5_hash('s')})")).alias("shingle")).collect()))
-    assert arrow2 == expr2
+    want5 = sorted(
+        (i, py_md5_hash(s))
+        for i, t, _ in HOSTILE_ROWS if t is not None
+        for s in _py_shingles(t, 5) if s)
+    assert got5 == want5
 
 
-def test_jaccard_and_decontam_arrow_path_parity(spark, hostile, monkeypatch):
-    """End-to-end: the full operators agree between the Arrow kernel
-    path (default) and the expression fallback."""
-    def run_all():
-        jac = sorted(map(tuple, dedup.jaccard_pairs(
-            hostile, threshold=0.01, within_col="source",
-            max_df=200).collect()))
-        bench = hostile.filter(F.col("doc_id") < 4).select(
-            F.col("doc_id").alias("bench_id"), "text")
-        dec = sorted(map(tuple, dedup.decontaminate(
-            hostile, bench, n=3, min_overlap=1).collect()))
-        lsh = sorted(map(tuple, dedup.minhash_near_duplicates(
-            hostile, threshold=0.2).collect()))
-        return jac, dec, lsh
+def test_jaccard_and_decontam_arrow_path_parity(spark, hostile):
+    """End-to-end: jaccard_pairs and decontaminate (Arrow shingle index)
+    against brute-force Python twins on the hostile rows. Jaccard also
+    gets a one-token-longer copy of every row (ids + 100), so near-dup
+    pairs exist across the hostile texts."""
+    rows = HOSTILE_ROWS + [
+        (i + 100, None if t is None else t + " tail", src)
+        for i, t, src in HOSTILE_ROWS]
+    live = [(i, t, src) for i, t, src in rows if t is not None]
 
-    _with_env(monkeypatch, True)
-    on = run_all()
-    _with_env(monkeypatch, False)
-    off = run_all()
-    assert on == off
-    assert len(on[0]) > 0 or len(on[1]) > 0  # something actually fired
+    jac = {(r.doc_a, r.doc_b): r.jaccard for r in dedup.jaccard_pairs(
+        spark.createDataFrame(rows, hostile.schema), threshold=0.01,
+        within_col="source", max_df=200).collect()}
+    want_jac = {}
+    for (a, ta, sa), (b, tb, sb) in itertools.combinations(live, 2):
+        A, B = _py_shingles(ta), _py_shingles(tb)
+        inter = len(A & B)
+        if sa == sb and inter:
+            j = round(inter / (len(A) + len(B) - inter), 6)
+            if j >= 0.01:
+                want_jac[(a, b)] = j
+    assert jac.keys() == want_jac.keys()
+    for k in jac:
+        assert abs(jac[k] - want_jac[k]) < 1e-6, k
+
+    bench = hostile.filter(F.col("doc_id") < 4).select(
+        F.col("doc_id").alias("bench_id"), "text")
+    dec = sorted(map(tuple, dedup.decontaminate(
+        hostile, bench, n=3, min_overlap=1).collect()))
+    want_dec = sorted(
+        (c, b, overlap)
+        for c, tc, _ in live if c < 100
+        for b, tb, _ in live if b < 4
+        for overlap in [len({s for s in _py_shingles(tc) if s}
+                            & _py_shingles(tb))]
+        if overlap >= 1)
+    assert dec == want_dec
+    assert len(jac) > 0 and len(dec) > 0  # something actually fired

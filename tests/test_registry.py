@@ -73,3 +73,36 @@ def test_rotated_out_oracle_parity(spark):
 
     rc = main("/root/testdata/sf0.01", only=",".join(MANIFEST["rotated_out"]))
     assert rc == 0, "rotated-out query failed oracle parity (see stdout)"
+
+
+def _env_levers_read(pkg: pathlib.Path) -> set[str]:
+    """FASTPASTA_* names the package reads from the environment:
+    ``os.environ.get("X")``, ``os.environ["X"]`` or ``os.getenv("X")``."""
+    import ast
+
+    names = set()
+    for path in pkg.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                fn = ast.unparse(node.func)
+                key = node.args[0] if node.args else None
+                if not (fn.endswith("environ.get") or fn.endswith("getenv")):
+                    continue
+            elif isinstance(node, ast.Subscript):
+                if not ast.unparse(node.value).endswith("environ"):
+                    continue
+                key = node.slice
+            else:
+                continue
+            if (isinstance(key, ast.Constant) and isinstance(key.value, str)
+                    and key.value.startswith("FASTPASTA_")):
+                names.add(key.value)
+    return names
+
+
+def test_env_levers_are_pinned():
+    """The package reads exactly two FASTPASTA_* env vars, both guarding
+    a real resource limit (README documents them). A new one needs a
+    reason to exist and an update here; A/B levers do not belong."""
+    assert _env_levers_read(ROOT / "fastpasta_spark") == {
+        "FASTPASTA_MEDIA_BC_MAX", "FASTPASTA_CACHE_COMPRESS"}

@@ -48,6 +48,40 @@ def test_stream_matches_batch(spark, tmp_path):
     again = spark.read.parquet(str(tmp_path / "out" / "violations")).count()
     assert again == len(got)
 
+    # replay: drop the last epoch's commit (the query stopped after the
+    # sink write, before the checkpoint commit) and restart — the
+    # replayed epoch must replace its rows in the sink, not append them
+    commits = tmp_path / "ckpt" / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    (commits / str(last)).unlink()
+    (commits / f".{last}.crc").unlink()
+    q3 = validate_stream(
+        spark, in_dir,
+        out_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q3.awaitTermination(60)
+    assert q3.exception() is None
+    replayed = sorted(
+        (r.doc_id, r.span_idx, r.offset, r.check_code)
+        for r in spark.read.parquet(str(tmp_path / "out" / "violations")).collect()
+    )
+    assert replayed == expected
+
+
+def test_stream_clean_corpus_sink_readable(spark, tmp_path):
+    """An all-clean stream writes no violation rows, but its sink must
+    still read back as an empty table with the violation columns."""
+    docs = corpus_df(spark, CorpusConfig(n_docs=50, corrupt_per_mille=0))
+    in_dir = str(tmp_path / "in")
+    docs.repartition(2).write.parquet(in_dir)
+    q = validate_stream(spark, in_dir, out_dir=str(tmp_path / "out"),
+                        checkpoint_dir=str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    sink = spark.read.parquet(str(tmp_path / "out" / "violations"))
+    assert sink.count() == 0
+    assert {"doc_id", "check_code", "epoch_id"} <= set(sink.columns)
+
 
 def test_stream_referential_matches_batch_check_all(spark, tmp_path):
     """validate_stream with a media dim must emit the same E110 rows as

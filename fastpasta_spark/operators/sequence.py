@@ -19,11 +19,14 @@ with ``mapInArrow`` so the slow path is as fast as it can be:
 
 Output rows are discriminated by ``row_type``:
   'v' violation | 's' stats partial (O(batches)) | 'k' doc-id key row
-  (uniqueness). VALID media refs are never pass output (since round 5:
-  as 'r' rows they were ~90% of pass rows on media-heavy corpora and
-  dominated the stage-2 materialization); the referential check runs
-  in-scan when ``valid_media_ids`` is provided, emitting only the rare
-  dangling refs as E110 'v' rows — zero extra corpus scan.
+  (uniqueness; ``stat_value`` is the doc's fail flag, 1.0 when the doc
+  emitted any non-WARNING 'v' row, so check_all's verdicts need no
+  join against the violations). VALID media refs are never pass output
+  (since round 5: as 'r' rows they were ~90% of pass rows on
+  media-heavy corpora and dominated the stage-2 materialization); the
+  referential check runs in-scan when ``valid_media_ids`` is provided,
+  emitting only the rare dangling refs as E110 'v' rows — zero extra
+  corpus scan.
 
 Per-document restart (cdp_running.rs:87-104) means no cross-partition
 state: any partitioning is correct and the pass scales linearly — this
@@ -617,23 +620,11 @@ def _make_arrow_pass(fused: bool, trigger_period: int | None = None,
 
             out_batches: list[pa.RecordBatch] = []
 
-            # ---- 'k' key rows (vectorized) ------------------------------
-            if fused:
-                out_batches.append(pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(["k"] * n_docs, pa.string()),
-                        doc_id_arr.cast(pa.string()),
-                        _empty_cols(n_docs, pa.int32()),
-                        _empty_cols(n_docs, pa.int32()),
-                        _empty_cols(n_docs, pa.string()),
-                        _empty_cols(n_docs, pa.string()),
-                        _empty_cols(n_docs, pa.string()),
-                        _empty_cols(n_docs, pa.string()),
-                        _empty_cols(n_docs, pa.float64()),
-                    ],
-                    schema=_ARROW_SCHEMA,
-                ))
+            # per-doc fail flag for the 'k' rows: set by every emitter
+            # of a non-WARNING 'v' row (screened-clean docs stay False)
+            fail = np.zeros(n_docs, dtype=bool)
 
+            if fused:
                 # NOTE round 5: media-ref ('r') rows are no longer emitted
                 # here. On a media-heavy corpus they were ~90% of the pass
                 # output (102M of 113M rows on the 8M-doc scaling corpus)
@@ -654,6 +645,7 @@ def _make_arrow_pass(fused: bool, trigger_period: int | None = None,
                     if not n:
                         return
                     par = parent[idx]
+                    fail[par] = True
                     out_batches.append(pa.RecordBatch.from_arrays(
                         [
                             pa.array(["v"] * n, pa.string()),
@@ -675,6 +667,7 @@ def _make_arrow_pass(fused: bool, trigger_period: int | None = None,
                     n = len(dsel)
                     if not n:
                         return
+                    fail[dsel] = True
                     out_batches.append(pa.RecordBatch.from_arrays(
                         [
                             pa.array(["v"] * n, pa.string()),
@@ -922,6 +915,9 @@ def _make_arrow_pass(fused: bool, trigger_period: int | None = None,
                     legal_chip_orderings=legal_chip_orderings)
                 if not vs:
                     continue
+                # FSM WARNING codes (lane-layer APE) do not fail the doc
+                if any(v[3] != S.SEV_WARNING for v in vs):
+                    fail[d] = True
                 did = _doc_ids()[d]
                 for i, off, code, sev, msg in vs:
                     f_doc.append(did); f_span.append(i)
@@ -930,6 +926,23 @@ def _make_arrow_pass(fused: bool, trigger_period: int | None = None,
             if f_doc:
                 out_batches.append(_viol_batch(f_doc, f_span, f_off,
                                                f_code, f_sev, f_msg))
+
+            # ---- 'k' key rows (vectorized): stat_value = fail flag ------
+            if fused:
+                out_batches.append(pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(["k"] * n_docs, pa.string()),
+                        doc_id_arr.cast(pa.string()),
+                        _empty_cols(n_docs, pa.int32()),
+                        _empty_cols(n_docs, pa.int32()),
+                        _empty_cols(n_docs, pa.string()),
+                        _empty_cols(n_docs, pa.string()),
+                        _empty_cols(n_docs, pa.string()),
+                        _empty_cols(n_docs, pa.string()),
+                        pa.array(fail.astype(np.float64)),
+                    ],
+                    schema=_ARROW_SCHEMA,
+                ))
 
             for ob in out_batches:
                 yield ob

@@ -10,20 +10,22 @@ valid refs, ~90% of pass rows on media-heavy corpora, never leave the
 pass, and no second scan exists; BENCH/REFS_INPASS.md):
 
   stage 1  docs scan -> fused mapInArrow pass (FSM + stateless battery
-           + stats partials + uniqueness keys)  [the one COMPUTE scan]
+           + stats partials + flagged uniqueness keys)  [the one COMPUTE scan]
   stage 2  pass output materialized ONCE, partitioned by row_type
            (parquet work_dir -> partition pruning per branch; or
            MEMORY_AND_DISK persist for small runs)
   stage 3  branches on the (much smaller) pass output:
              'v' rows  -> violation table
              's' rows  -> stats merge (partial+final agg)
-             'k' rows  -> uniqueness (groupBy count>1 + HLL totals)
+             'k' rows  -> uniqueness groups (count + max fail flag,
+                          persisted): E100 rows, HLL totals, verdicts
              kind mix  -> chi-square drift vs golden profile
            (E110 referential rows are 'v' rows: the pass checks refs
             in-scan against a broadcast media-id set — no re-scan; the
             columnar media_ref_rows form below serves the standalone
             dangling_refs driver query)
-  stage 4  metrics assembly + error-code rollup (G6 analogue)
+  stage 4  metrics assembly + error-code rollup (G6 analogue); verdicts
+           project the groups (FAIL = fail flag or dup_count > 1)
 
 Violations sort by (doc_id, offset, check_code) — the reference sorts
 error rows by memory position before display (error_stats.rs:36-47).
@@ -45,7 +47,7 @@ from fastpasta_spark.operators.sequence import sequence_pass, split_sequence_out
 class CheckResult:
     violations: DataFrame  # VIOLATION_SCHEMA, sorted
     metrics: DataFrame     # (name, value)
-    passed: DataFrame      # (doc_id, verdict) per-doc pass/fail
+    passed: DataFrame      # (doc_id, verdict), one row per distinct doc_id
     # internal persisted frames (pass output, violation union). They are
     # ALSO registered with the session cache registry (tracked_persist),
     # so either release path works: callers that run MANY check_all's in
@@ -74,25 +76,22 @@ def _uniqueness_branch(
     """'k' rows -> (E100 violations, uniqueness metrics, persisted
     groups — the caller must register the third frame for release).
 
-    ONE groupBy lineage serves everything: dup violations filter it, the
-    exact distinct is its row count, and the HLL sketches its keys (same
-    estimate domain). Round-2 profiling showed a groupBy for dups PLUS
-    an independent countDistinct agg paid the key shuffle twice and was
-    the largest non-pass cost at 16 cores. A persist() here was then
-    A/B-measured SLOWER at 32 cores — but that verdict predates the
-    round-7-bonus `inMemoryColumnarStorage.compressed=false` default,
-    which made the cache build of the ~all-distinct groups cheap;
-    round-8 re-measured ALTERNATING at 32 cores (quiet reps): persisted
-    2.55-2.86s vs re-evaluated 3.34-3.52s end-to-end check_all, so the
-    violations action and the metrics action now share one key shuffle
-    instead of paying it twice. The persist registers with the session
-    cache registry AND is returned so check_all adds it to
-    CheckResult._cached (slice loops release per result).
+    keys holds doc_id and, optionally, more columns (check_all's boolean
+    `failed` flag), whose max the groups then carry. ONE groupBy lineage serves
+    everything: dup violations filter it, the exact distinct is its row
+    count, the HLL sketches its keys (same estimate domain), and
+    check_all projects its verdicts from it. It is persisted so those
+    actions share one key shuffle (round 8, alternating at 32 cores:
+    2.55-2.86s persisted vs 3.34-3.52s re-evaluated, end-to-end
+    check_all); the persist registers with the session cache registry
+    AND is returned so check_all adds it to CheckResult._cached (slice
+    loops release per result).
     """
     from fastpasta_spark.functions.cache import tracked_persist
 
     grouped = tracked_persist(keys.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("dup_count")))
+        F.count(F.lit(1)).alias("dup_count"),
+        *[F.max(c).alias(c) for c in keys.columns if c != "doc_id"]))
     viol = grouped.filter(F.col("dup_count") > 1).select(
         "doc_id",
         F.lit(None).cast("int").alias("span_idx"),
@@ -333,7 +332,8 @@ def check_all(
         out = tracked_persist(out)
 
     violations_seq, stats = split_sequence_output(out)
-    keys = out.filter(F.col("row_type") == "k").select("doc_id")
+    keys = out.filter(F.col("row_type") == "k").select(
+        "doc_id", (F.col("stat_value") > 0).alias("failed"))
 
     uniq_viol, uniq_metrics, uniq_grouped = _uniqueness_branch(keys)
     # E110 referential rows arrive in violations_seq: the fused pass
@@ -371,9 +371,9 @@ def check_all(
     for b in branches[1:]:
         violations = violations.unionByName(b)
     # the violation table is orders of magnitude smaller than the corpus
-    # but feeds FOUR consumers (count, per-code rollup, verdicts, caller)
-    # — persist it so the union (incl. the uniqueness shuffle and the
-    # anti-join) runs once, and sort only the returned view
+    # but feeds several consumers (count, rollups, the fallback's
+    # verdicts, caller) — persist it so the union (incl. the uniqueness
+    # shuffle and the anti-join) runs once; sort only the returned view
     violations = tracked_persist(violations)
     violations_sorted = violations.orderBy("doc_id", "offset", "check_code")
     if max_errors is not None:
@@ -397,46 +397,40 @@ def check_all(
                "concat('error_docs_', check_code), "
                "CAST(docs_affected AS DOUBLE)) AS (name, value)")
     )
-    total = violations.agg(
-        F.count(F.lit(1)).cast("double").alias("value")
-    ).select(F.lit("total_errors").alias("name"), "value")
+
+    # per-doc verdict, projected from the persisted uniqueness groups:
+    # FAIL when the pass flagged a copy of the doc (a non-WARNING 'v'
+    # row) or its doc_id is duplicated (E100). NULL doc_ids are one group.
+    groups = uniq_grouped
+    failed = F.col("failed") | (F.col("dup_count") > 1)
+    if ref_fallback:
+        # the anti-join's E110 rows are the only errors the pass did not
+        # flag; joined null-safe, so a NULL doc_id meets its group
+        dangling = violations.filter(
+            F.col("check_code") == S.E110_DANGLING_REF
+        ).select(F.col("doc_id").alias("ref_id"),
+                 F.lit(1).alias("ref")).distinct()
+        groups = groups.join(
+            dangling, groups["doc_id"].eqNullSafe(dangling["ref_id"]), "left")
+        failed = failed | F.col("ref").isNotNull()
+    passed = groups.select(
+        "doc_id", F.when(failed, "FAIL").otherwise("PASS").alias("verdict"))
+
+    def metric_row(df: DataFrame, name: str, agg) -> DataFrame:
+        return df.agg(agg.cast("double").alias("value")).select(
+            F.lit(name).alias("name"), "value")
 
     # per-key error attribution (error_stats.rs:13-55 "staves with
-    # errors" analogue): how many distinct docs carry a real error, and
-    # how many distinct codes fired
-    attrib = violations.filter(F.col("severity") != S.SEV_WARNING).agg(
-        F.countDistinct(F.coalesce(F.col("doc_id"), F.lit("\x00"))
-                        ).cast("double").alias("d"),
-        F.countDistinct("check_code").cast("double").alias("c"),
-    ).selectExpr(
-        "stack(2, 'docs_with_errors', d, 'error_codes_distinct', c)"
-        " AS (name, value)"
-    )
-
-    metrics = (stats.unionByName(uniq_metrics).unionByName(code_counts)
-               .unionByName(total).unionByName(attrib))
-
-    # per-doc verdict: docs with no ERROR/FATAL violation pass. NULL
-    # doc_ids coalesce to a sentinel for the join — a NULL key never
-    # matches a left_anti join, so a doc that produced an E10 ERROR
-    # would otherwise be reported PASS. (All NULL-keyed docs collapse
-    # into the one sentinel row — NULL keys are indistinguishable.)
-    sent = "\x00null_doc_id"
-    key_of = F.coalesce(F.col("doc_id"), F.lit(sent)).alias("doc_id")
-    failed = violations.filter(
-        F.col("severity") != S.SEV_WARNING
-    ).select(key_of).distinct()
-    passed = keys.select(key_of).distinct().join(
-        failed, "doc_id", "left_anti"
-    ).select(
-        "doc_id", F.lit("PASS").alias("verdict")
-    ).unionByName(
-        failed.select("doc_id", F.lit("FAIL").alias("verdict"))
-    ).select(
-        F.when(F.col("doc_id") == sent, F.lit(None).cast("string"))
-        .otherwise(F.col("doc_id")).alias("doc_id"),
-        "verdict",
-    )
+    # errors" analogue): how many docs FAIL, how many distinct codes fired
+    metrics = stats.unionByName(uniq_metrics).unionByName(code_counts)
+    for m in (metric_row(violations, "total_errors", F.count(F.lit(1))),
+              metric_row(passed, "docs_with_errors",
+                         F.count(F.when(F.col("verdict") == "FAIL", 1))),
+              metric_row(violations.filter(F.col("severity")
+                                           != S.SEV_WARNING),
+                         "error_codes_distinct",
+                         F.countDistinct("check_code"))):
+        metrics = metrics.unionByName(m)
 
     if custom is not None and custom.expectations():
         # stats-expectation failures (E9001) assert on the FINISHED

@@ -33,6 +33,30 @@ def _ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zip_path)
 
 
+def mem_total_kb(meminfo: str = "/proc/meminfo") -> int | None:
+    """The host's MemTotal in kB, or None where /proc/meminfo is absent."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def driver_memory(total_kb: int | None,
+                  override: str | None = None) -> str | None:
+    """spark.driver.memory: `override` (SPARK_DRIVER_MEM) when set, else
+    half the host's RAM in MiB, so the Python workers and the OS keep at
+    least the other half (a heap sized past the RAM lets the JVM grow
+    until the OOM killer stops it). None when the RAM is unknown:
+    Spark's own default applies."""
+    if override:
+        return override
+    return f"{total_kb // 2048}m" if total_kb else None
+
+
 def get_spark(
     app_name: str = "fastpasta_spark",
     cores: int | None = None,
@@ -70,10 +94,12 @@ def get_spark(
                 os.environ.get("FASTPASTA_CACHE_COMPRESS", "false"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    heap = driver_memory(mem_total_kb(), os.environ.get("SPARK_DRIVER_MEM"))
+    if heap:
+        builder = builder.config("spark.driver.memory", heap)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -55,12 +55,16 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # never fires or chronically re-runs clean reps — and asymmetric rep
 # counts skew a min-of-reps comparison toward the side with more
 # draws. Add rounds instead if spread looks wide.
-LOAD_GATE = float(os.environ.get("AB_LOAD_GATE", "4.0"))
+# Both defaults scale with the host: the gate is an eighth of its cores
+# (4.0 on 32 cores, 0.5 on 4 — a fixed 4.0 is saturation on a 4-core
+# host), and a rep is pinned to all of them unless SPARK_GRAFT_CPUS
+# names fewer.
+LOAD_GATE = float(os.environ.get("AB_LOAD_GATE", (os.cpu_count() or 8) / 8))
 LOAD_WAIT_S = int(os.environ.get("AB_LOAD_WAIT_S", "600"))
 
 
 def bench_cpus() -> int:
-    want = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    want = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     return max(1, min(want, os.cpu_count() or want))
 
 

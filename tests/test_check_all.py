@@ -353,3 +353,78 @@ def test_run_failfast_guarded_parity(spark, monkeypatch):
     assert (done_fb, total_fb) == (done_bc, total_bc)
     assert _viol_rows(viol_fb) == rows_bc
     assert any(r[3] == "E110" for r in rows_bc)  # referential exercised
+
+
+# ---- verdicts vs a pure-Python twin, on hostile docs and every path ----
+
+def _sp(kind, text=None, ref=None, off=0):
+    return {"kind": kind, "text": text, "media_ref": ref, "offset": off}
+
+
+def _framed(*content):
+    """A grammar-clean one-frame doc around the given content spans."""
+    spans = [_sp("header", f"lanes={len(content)}"),
+             _sp("trig", "cont=0,bc=5")]
+    spans += list(content) + [_sp("trailer", "done=1")]
+    for i, s in enumerate(spans):
+        s["offset"] = i
+    return spans
+
+
+def _python_verdicts(docs_rows, media_ids):
+    """(doc_id -> verdict, docs_with_errors) from _python_oracle's rows:
+    a doc FAILs when any of its rows is not a WARNING; NULL doc_ids are
+    one key."""
+    rows = _python_oracle(docs_rows, media_ids)
+    failing = {v[0] for v in rows if v[4] != S.SEV_WARNING}
+    return ({r.doc_id: "FAIL" if r.doc_id in failing else "PASS"
+             for r in docs_rows}, len(failing))
+
+
+@pytest.fixture(scope="module")
+def hostile_docs(spark):
+    cfg = CorpusConfig(n_docs=150, corrupt_per_mille=200, dup_per_mille=40)
+    media = media_df(spark, cfg)
+    ok_ref = media.first().media_id
+    warn = f"lane=0,chips=0;1,cbc=5,ape={0xF2}"  # APE strip_start: WARNING
+    hostile = [
+        (None, _framed(_sp("text", "null id, clean spans"))),
+        (None, _framed(_sp("media", ref="m_dangling_null"))),
+        ("warn_only", _framed(_sp("text", warn))),
+        ("dup_mixed", _framed(_sp("media", ref=ok_ref))),
+        ("dup_mixed", _framed(_sp("text", ""))),  # E71 on this copy only
+        ("dup_clean", _framed(_sp("text", "a"))),
+        ("dup_clean", _framed(_sp("text", "a"))),
+        ("ref_only", _framed(_sp("media", ref="m_dangling"))),
+    ]
+    docs = corpus_df(spark, cfg).unionByName(
+        spark.createDataFrame(hostile, S.DOCS_SCHEMA))
+    return docs, media
+
+
+@pytest.mark.parametrize("path", ["broadcast", "guard_fallback", "work_dir"])
+def test_verdicts_match_python_twin(spark, hostile_docs, path, monkeypatch,
+                                    tmp_path):
+    docs, media = hostile_docs
+    rows = docs.collect()
+    media_ids = {m.media_id for m in media.collect()}
+    want, want_failed = _python_verdicts(rows, media_ids)
+    # the hostile docs are what they claim to be
+    assert (want[None], want["warn_only"], want["dup_mixed"],
+            want["dup_clean"], want["ref_only"]) == ("FAIL", "PASS", "FAIL",
+                                                     "FAIL", "FAIL")
+    warn_rows = [v for v in _python_oracle(rows, media_ids)
+                 if v[0] == "warn_only"]
+    assert warn_rows and all(v[4] == S.SEV_WARNING for v in warn_rows)
+    if path == "guard_fallback":
+        monkeypatch.setenv("FASTPASTA_MEDIA_BC_MAX", "1")
+    res = check_all(docs, media, work_dir=str(tmp_path / "work")
+                    if path == "work_dir" else None)
+    try:
+        got = res.passed.collect()
+        assert len(got) == len(want)  # one row per distinct doc_id
+        assert {r.doc_id: r.verdict for r in got} == want
+        m = {r.name: r.value for r in res.metrics.collect()}
+        assert m["docs_with_errors"] == want_failed
+    finally:
+        res.release()
